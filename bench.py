@@ -52,6 +52,18 @@ def _host_canary() -> tuple[float, float]:
     return round(cpu_s, 3), round(membw_s, 3)
 
 
+# Local-bench session override, shared with tools/ab.py and tools/capture.py
+# so their sessions (and captured plans) are the benched ones. The sf0.1
+# inputs are single ~1-10 MB parquet files, which the default 128 MB split
+# size turns into 1-3 scan tasks on 32 cores; smaller splits parallelize the
+# scans (~10% on scan-heavy queries). On a real cluster files exceed the
+# default split size and these knobs stay at their cluster-appropriate
+# defaults (session.py).
+BENCH_CONF = {
+    "spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
+    "spark.sql.files.openCostInBytes": str(512 * 1024),
+}
+
 HEADLINE = [
     "q_star_join",
     "q_agg_basic",
@@ -80,18 +92,7 @@ def main() -> None:
 
     import __spark_entry__ as contract
 
-    # local-bench override: the sf0.1 inputs are single ~1-10 MB parquet
-    # files, which the default 128 MB split size turns into 1-3 scan tasks on
-    # 32 cores; smaller splits parallelize the scans (~10% on scan-heavy
-    # queries). On a real cluster files exceed the default split size and
-    # these knobs stay at their cluster-appropriate defaults (session.py).
-    spark = get_spark(
-        app_name="finegourmet_bench",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
-            "spark.sql.files.openCostInBytes": str(512 * 1024),
-        },
-    )
+    spark = get_spark(app_name="finegourmet_bench", extra_conf=BENCH_CONF)
     queries = contract.queries()
 
     # Session-wide warmup BEFORE any timed loop: touch every input table

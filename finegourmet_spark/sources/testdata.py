@@ -1,10 +1,12 @@
 """Loaders for the driver's TPC-H-ish parquet test tables (TESTDATA.md).
 
-Explicit schemas everywhere — the engine never uses inferSchema (the
-reference double-scans every CSV for inference, reference: etl/extract.py:67;
-see SURVEY.md §4 item 3). For parquet the schema travels in the footer, but we
-still pin expected schemas so a drifted file fails loudly instead of silently
-changing plan shapes.
+The engine never uses CSV inferSchema (the reference double-scans every CSV
+for inference, reference: etl/extract.py:67; see SURVEY.md §4 item 3). These
+tables are parquet, whose schema travels in the footer: ``_read`` is a plain
+``spark.read.parquet``, so Spark reads the schema from the file (one small
+job per read) and a drifted file changes column types instead of failing.
+Expected schemas are NOT pinned; only ``events.ts`` is normalized
+(``load_table``).
 """
 
 from __future__ import annotations
